@@ -1,8 +1,12 @@
 #!/usr/bin/env python3
-"""Aggregate FLOOR_AUDIT_r15_sf*.json into the per-query fixed-floor
-decomposition table for SCALE.md: suite-level component sums at each
-scale factor, the cross-scale deltas that separate fixed from marginal
-cost, and the outlier queries on each component."""
+"""Aggregate two FloorAudit outputs (a small and a large scale factor)
+into the per-query fixed-floor decomposition table for SCALE.md:
+suite-level component sums at each scale factor, the cross-scale deltas
+that separate fixed from marginal cost, and the outlier queries on each
+component.
+
+    python3 scripts/floor_summary.py FLOOR_AUDIT_sf0.001.json FLOOR_AUDIT_sf0.1.json
+"""
 import json
 import sys
 
@@ -27,8 +31,10 @@ def comp(q):
 
 
 def main():
-    small = load(sys.argv[1] if len(sys.argv) > 1 else "FLOOR_AUDIT_r15_sf0.001.json")
-    big = load(sys.argv[2] if len(sys.argv) > 2 else "FLOOR_AUDIT_r15_sf0.1.json")
+    if len(sys.argv) != 3:
+        sys.exit("usage: floor_summary.py <small-sf FLOOR_AUDIT.json> <large-sf FLOOR_AUDIT.json>")
+    small = load(sys.argv[1])
+    big = load(sys.argv[2])
     shared = sorted(set(small) & set(big))
     print(f"queries in both: {len(shared)}  (sf0.001 only: {len(set(small)-set(big))}, sf0.1 only: {len(set(big)-set(small))})")
 

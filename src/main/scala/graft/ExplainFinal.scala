@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.metrics.Harness
 
 /** Dev tool: EXECUTE named queries and print the FINAL adaptive physical
   * plan (the SQL-tab view) — [[ExplainOne]] prints the initial
@@ -16,14 +16,7 @@ object ExplainFinal {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCores)
     for (n <- names) {
       val df = SparkEntry.queries(n)(spark, sfDir)
       // drive THIS QueryExecution's own adaptive plan (a .count() or

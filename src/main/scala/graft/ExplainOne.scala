@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.metrics.Harness
 
 /** Dev tool: print the formatted physical plan of named queries at a
   * given sf dir — the cross-SCALE companion to [[PlanDump]] (which pins
@@ -14,13 +14,7 @@ object ExplainOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     for (n <- names) {
       println(s"==== $n @ $sfDir")
       println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(

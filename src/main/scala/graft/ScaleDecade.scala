@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.metrics.Harness
+
 /** Evidence tool: synthesize a FOURTH fixture decade — an sf1-equivalent
   * corpus, 10× sf0.1 (~6M lineitem rows) — with foreign keys kept
   * consistent, so the full Verify + DuckDB gate and the bench/floor
@@ -92,12 +94,7 @@ object ScaleDecade {
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dest = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     println(s"DECADE READY: ${build(spark, src, dest)}")
     spark.stop()
   }

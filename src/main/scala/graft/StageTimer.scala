@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import graft.metrics.{Harness, TaskLog}
 
 /** Dev tool: run named queries (after a JIT warm run) and print per-STAGE
   * task-time / record counts for the warm execution, so "where does the
@@ -11,37 +10,24 @@ object StageTimer {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long, Long, Int, Long)]()
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        stages.add((si.stageId,
-          si.name.split("\n")(0).take(60),
-          si.taskMetrics.executorRunTime,
-          si.taskMetrics.executorCpuTime / 1000000L,
-          si.numTasks,
-          si.taskMetrics.inputMetrics.recordsRead +
-            si.taskMetrics.shuffleReadMetrics.recordsRead))
-      }
-    })
+    val spark = Harness.session(32)
+    val log = TaskLog.attach(spark)
     for (n <- names) {
       try SparkEntry.queries(n)(spark, sfDir).count() catch { case _: Throwable => }
-      Thread.sleep(300); stages.clear()
+      log.take()
       val t0 = System.nanoTime()
       val rows = SparkEntry.queries(n)(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let listener drain
+      val run = log.take()
       println(f"==== $n warm: $wall%.3f s ($rows rows)")
-      import scala.jdk.CollectionConverters._
-      for ((id, nm, rt, cpu, nt, recs) <- stages.asScala.toSeq.sortBy(_._1))
-        println(f"  stage $id%5d run=${rt}%6d ms cpu=${cpu}%6d ms tasks=$nt%3d recs=$recs%9d  $nm")
+      val byStage = run.tasks.groupBy(_.stageId)
+      for ((id, name) <- run.stages.sortBy(_._1)) {
+        val ts = byStage.getOrElse(id, Seq.empty)
+        val rt = ts.map(_.runMs).sum
+        val cpu = ts.map(_.cpuNs).sum / 1000000L
+        val recs = ts.map(t => t.inputRecords + t.shuffleReadRecords).sum
+        println(f"  stage $id%5d run=${rt}%6d ms cpu=${cpu}%6d ms tasks=${ts.size}%3d recs=$recs%9d  ${name.take(60)}")
+      }
     }
     spark.stop()
   }

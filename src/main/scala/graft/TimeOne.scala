@@ -1,34 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.metrics.Harness
 
 /** Dev tool: time individual queries by name at a given sf dir.
   * `sbt "runMain graft.TimeOne /root/testdata/sf0.1 q_dedup_simhash ..."`
-  * Runs each query twice (cold, warm) after one warmup query.
+  * Runs each query twice (cold, warm) after one warmup query. A/B a
+  * candidate tuning with the harness hook, e.g.
+  * `SPARK_GRAFT_CONF="spark.sql.codegen.methodSplitThreshold=256"`.
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1)
-    val builder = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-    // A/B experiment hook: SPARK_GRAFT_CONF="k=v;k=v" injects session
-    // confs so a candidate tuning can be timed without a recompile.
-    // ';'-separated (r21 advice): Spark conf VALUES legitimately carry
-    // commas (lists, JVM option strings) — a ',' split silently
-    // shredded them into garbage pairs. ',' still accepted for
-    // comma-free values (legacy invocations split harmlessly).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(
-      _.split(if (sys.env("SPARK_GRAFT_CONF").contains(";")) ";" else ",")
-        .filter(_.contains("="))
-        .foreach { kv =>
-          val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-        })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(32)
     try SparkEntry.queries("q_text_stats")(spark, sfDir).count() catch { case _: Throwable => }
     val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).getOrElse(2)
     for (n <- names; i <- 1 to runs) {

@@ -22,9 +22,11 @@ import org.apache.spark.sql.types._
   *
   * Modes (validated against the bucket element type):
   *  - `match32`: sig is array<int>; m = positions where both elements
-  *    are non-null and equal — [[VectorExpressions.matchCount]]'s rule
-  *    verbatim (null if either sig is null, as `graft_match_count`'s
-  *    null propagation did).
+  *    are non-null and equal — the rule of
+  *    `size(filter(zip_with(sa, sb, (x, y) -> x = y), p -> p))` verbatim
+  *    (zip_with pads the shorter sig with nulls and `null = x` is
+  *    dropped, so only i < min(len) with both sides non-null counts;
+  *    null if either sig is null).
   *  - `hamming`: sig is struct<hi: long, lo: long>; m =
   *    bit_count(hi⊕hi) + bit_count(lo⊕lo) — null if any field is null,
   *    exactly the xor/bit_count chain's propagation.

@@ -78,27 +78,29 @@ object TextExpressions {
     org.apache.spark.sql.functions.shiftright(packed, 32)
 
   /** ∩-size of two ascending-sorted distinct long arrays — see
-    * [[SortedIntersectCount]]. */
-  def sortedIntersectCount(a: Column, b: Column): Column =
+    * [[SortedIntersectCount]]. Engine-private: its only inputs are
+    * [[shingleH48DistinctSorted]] sets, which establish the
+    * sorted-distinct precondition by construction. */
+  private[graft] def sortedIntersectCount(a: Column, b: Column): Column =
     ColumnBridge.column(SortedIntersectCount(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Whole-document MinHash signature in ONE per-row pass — shingle →
     * h48 → per-permutation `floorMod(v·aᵢ + bᵢ, p)` minima — exactly the
-    * explode + `graft_minhash_sig` group aggregate it replaces (same
-    * [[TextKernels]] shingle/h48 leaves, same fold arithmetic as
-    * [[SketchAggregates.minhashSig]]'s update). Valid because the
-    * aggregate's group key is the row's own doc_id: per-doc group ≡
-    * per-row. Callers must drop null-text rows first (the old explode
-    * dropped them by producing no rows). */
+    * explode + per-permutation `min(pmod(v·aᵢ + bᵢ, p))` group
+    * aggregate it replaces (same [[TextKernels]] shingle/h48 leaves).
+    * Valid because the aggregate's group key is the row's own doc_id:
+    * per-doc group ≡ per-row. Null when no shingle contributed;
+    * [[graft.ops.Dedup.minhashSignatures]] drops null-text rows, whose
+    * all-null signature banding would drop anyway. */
   def minhashH48(toks: Column, a: Seq[Long], b: Seq[Long], p: Long): Column =
     ColumnBridge.column(MinHashH48(ColumnBridge.expression(toks), a, b, p))
 
   /** Whole-document 64-bit SimHash as a 16-hex-char string in ONE
     * per-row pass — token → md5 prefix → 64 majority lanes — exactly the
-    * explode + md5/conv projection + `graft_simhash_sig` group aggregate
-    * it replaces ([[SketchAggregates.simhashSig]]; same digit order,
-    * same majority rule). Same per-row-group premise as [[minhashH48]]. */
+    * explode + md5/conv projection + per-bit-sum group aggregate it
+    * replaces (same digit order, same 2·cnt > n majority rule). Same
+    * per-row-group premise as [[minhashH48]]. */
   def simhashHex(toks: Column): Column =
     ColumnBridge.column(SimHashHex(ColumnBridge.expression(toks)))
 }
@@ -271,13 +273,14 @@ object TextKernels {
   }
 
   /** Per-row MinHash over the row's shingles: for each permutation i,
-    * min over shingles of `floorMod(h48(sh)·a(i) + b(i), p)` — the
-    * update arithmetic of [[SimHashBitCounts]]'s sibling
-    * [[MinHashSignature]] verbatim (floorMod for the same domain
-    * reasons documented there). Null shingles (null toks → the single
-    * null whole-text shingle) contribute nothing, exactly as the
-    * aggregate's null-skipping update; all-null input yields null,
-    * exactly as the aggregate's empty-group eval. */
+    * min over shingles of `floorMod(h48(sh)·a(i) + b(i), p)`. floorMod,
+    * not %: a negative input (a full-range 64-bit hash rather than the
+    * 48-bit non-negative h48) would otherwise land lane values in
+    * (-p, 0) that dominate every minimum; for h48 inputs the two agree
+    * (a ≤ 12351 < 2^14 ⇒ x·a < 2^62, no wrap). Null shingles (null toks
+    * → the single null whole-text shingle) contribute nothing, as
+    * `min` skips nulls; a row with no contributing shingle yields a
+    * null signature. */
   def minhashH48(toks: ArrayData, a: Array[Long], b: Array[Long],
       p: Long): Any = {
     val sh = shingleStrings(toks)
@@ -306,10 +309,10 @@ object TextKernels {
     * `shiftleft(conv(substring(md5(t),1,8),16,10),32) |
     * conv(substring(md5(t),9,8),16,10)` projection), 64 count lanes,
     * digit j (1-based, most-significant first) assembled from lanes
-    * (16−j)·4+b with the 2·cnt > n majority rule — the
-    * [[SimHashBitCounts]] update/eval loops verbatim. Null tokens are
-    * skipped (md5(NULL) → null → the aggregate's null-skipping update);
-    * zero contributing tokens yields null, as the empty-group eval. */
+    * (16−j)·4+b with the 2·cnt > n majority rule — the per-bit sums of
+    * the group aggregate it replaced. Null tokens are skipped (md5(NULL)
+    * → null, which the sums skip); zero contributing tokens yields
+    * null. */
   def simhashHex(toks: ArrayData): Any = {
     if (toks == null) return null
     val nEl = toks.numElements()
@@ -464,7 +467,8 @@ case class TokenStats(child: Expression, stops: Seq[String])
 }
 
 /** See [[TextKernels.minhashH48]]. Coefficients are Seq (structural
-  * equality — the [[MinHashSignature]] lesson); the kernel reads them
+  * equality: case-class equality over Array fields is reference
+  * equality, which would break semanticEquals); the kernel reads them
   * through Array copies bound once as reference objects. Null when the
   * input is null or no shingle contributed (parity with the group
   * aggregate's empty-group eval; callers drop null-text rows to match

@@ -166,14 +166,18 @@ object Dedup {
     // ONE per-row native kernel (graft_minhash_h48, r22b batch 2):
     // shingle → h48 → per-permutation minima fused into a single pass.
     // The pre-r22b shape was explode(shingles) + a per-doc group
-    // aggregate (graft_minhash_sig) — but the group key IS the row's
-    // own doc_id (unique by fixture contract, and every downstream
+    // aggregate of per-permutation minima — but the group key IS the
+    // row's own doc_id (unique by fixture contract, and every downstream
     // consumer assumes it), so per-doc group ≡ per-row and the whole
     // explode + partial/final aggregate + buffer exchange disappears:
     // the signature is computed inside the scan stage. Values are the
-    // aggregate's update arithmetic verbatim (TextExpressionsSpec pins
-    // signature parity); the isNotNull filter replicates the old
-    // explode's null-text drop (split(NULL) explodes to zero rows).
+    // aggregate's arithmetic verbatim (TextExpressionsSpec pins the
+    // row set against that chain). Row domain, changed on purpose: the
+    // old chain kept a null-text doc as a NULL-signature row
+    // (shinglesOf(NULL) = [NULL] explodes to one row whose h48 is NULL,
+    // and the aggregate over no values is NULL), which banding then
+    // dropped; the isNotNull filter drops that row here instead, so
+    // every emitted signature is non-null.
     // (duplicate shingles cannot change a min, so no distinct needed)
     docs.filter(col("text").isNotNull)
       .select(col("doc_id"),
@@ -235,7 +239,7 @@ object Dedup {
     // to 20. Bit-identical to distinct-then-top-20 (the r15c audit's
     // pair-dedup exchange was 190+ MB on the duplication corpus; now 0).
     // match count computed INSIDE the pair-expansion kernel (r22b
-    // batch 3, mode match32 — graft_match_count's rule verbatim), so
+    // batch 3, mode match32 — the zip_with/filter match rule), so
     // pair rows never carry the signatures
     bucketPairs(bands, Seq("band", "bh"), "match32")
       .select(col("doc_a"), col("doc_b"),
@@ -341,8 +345,8 @@ object Dedup {
     // ONE per-row native kernel (graft_simhash_hex, r22b batch 2): token
     // → md5 prefix → 64 majority lanes → hex digits, fused into a single
     // pass inside the scan stage. The r14 shape (explode per token, the
-    // md5/conv projection, then the graft_simhash_sig 65-long-buffer
-    // group aggregate) was already one corpus pass, but materialized a
+    // md5/conv projection, then a 65-long-buffer per-bit-count group
+    // aggregate) was already one corpus pass, but materialized a
     // per-TOKEN row stream through Generate + aggregate hash probes and
     // shipped per-doc buffers across a groupBy(doc_id) exchange — and
     // the group key is the row's own doc_id (unique by fixture
@@ -461,7 +465,7 @@ object Dedup {
       |WHERE len(list_intersect(a.s, b.s)) > 0
       |ORDER BY jaccard DESC, doc_a, doc_b
       |LIMIT 20""".stripMargin) { (s, d) =>
-    // persist, not localCheckpoint (r22, DedupNgramAB decade A/B:
+    // persist, not localCheckpoint (r22 decade A/B, OPTIMIZATION_r22.md:
     // persist 3.5/3.9/3.5 s vs ckpt 5.7/4.5/4.3 s vs none 4.9/4.1/4.3 s
     // interleaved at /tmp/graft_sf1; ties at sf0.1): localCheckpoint is
     // EAGER — it runs the subtree as an extra build-time job and pins
@@ -476,9 +480,8 @@ object Dedup {
   /** The q_dedup_ngram pipeline with a pluggable materialization
     * barrier for the two reused K-row-class frames (candidate pairs,
     * survivor shingle sets) — the declared query passes `persist`
-    * (see the A/B note above); [[graft.DedupNgramAB]] times the
-    * alternatives (no barrier / localCheckpoint) against it (r21
-    * verdict #4).
+    * (see the A/B note above); the r22 A/B timed the alternatives (no
+    * barrier / localCheckpoint) against it (r21 verdict #4).
     *
     * Two-job LSH verify (the standard shape): job 1 = signature
     * pipeline → banding → collision pairs; job 2 = re-shingle ONLY

@@ -65,7 +65,7 @@ class PairExpressionsSpec extends SparkSpec {
     eachCodegen {
       val old = oldPairs(df, Seq("band", "bh"), 4)
         .select(col("doc_a"), col("doc_b"),
-          graft.functions.VectorExpressions.matchCount(col("sa"), col("sb")).as("m"))
+          expr("size(filter(zip_with(sa, sb, (x, y) -> x = y), p -> p))").as("m"))
         .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSeq.sorted(ord)
       val neu = newPairs(df, Seq("band", "bh"), "match32", 4)
         .collect().map(r => (r.get(0), r.get(1), r.get(2))).toSeq.sorted(ord)

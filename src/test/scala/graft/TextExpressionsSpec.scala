@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import graft.functions.TextExpressions._
@@ -91,45 +91,62 @@ class TextExpressionsSpec extends SparkSpec {
     }
   }
 
-  test("minhashH48 kernel matches the explode + graft_minhash_sig aggregate") {
-    import graft.functions.SketchAggregates
-    val a = (0 until Dedup.NumPerms).map(Dedup.minhashA)
-    val b = (0 until Dedup.NumPerms).map(Dedup.minhashB)
-    // the pre-r22b pipeline, verbatim: barrier'd tokens → shingle
-    // explode → h48 → per-doc group aggregate
-    val toked = df.select(col("doc_id"), toks.as("tk")).repartition(col("doc_id"))
-    val oldSig = toked
-      .select(col("doc_id"), explode(Dedup.shinglesOf(col("tk"))).as("sh"))
-      .select(col("doc_id"), h48Of(col("sh")).as("v"))
-      .groupBy("doc_id")
-      .agg(SketchAggregates.minhashSig(col("v"), a, b, Dedup.MinhashP).as("sig"))
-    val newSig = Dedup.minhashSignatures(df)
-    val bad = oldSig.withColumnRenamed("sig", "old")
-      .join(newSig.withColumnRenamed("sig", "new"), Seq("doc_id"), "full")
-      .filter(!(col("old") <=> col("new"))).collect()
-    assert(bad.isEmpty, s"minhash kernel drift: ${bad.take(3).mkString("; ")}")
-    // the null-text doc is absent from BOTH (old: explode of a null
-    // array emits no rows; new: the explicit isNotNull filter)
-    val nullIds = df.filter(col("text").isNull).select("doc_id")
-      .as[Long].collect().toSet
-    val present = newSig.select("doc_id").as[Long].collect().toSet
-    assert(nullIds.nonEmpty && nullIds.forall(!present.contains(_)))
+  /** Row-set equality: anti-joins both ways on every column plus equal
+    * counts, so a missing row cannot pass as a NULL-valued one. */
+  private def assertSameRows(ref: DataFrame, got: DataFrame, label: String): Unit = {
+    val cols = ref.columns.toSeq
+    val missing = ref.join(got, cols, "left_anti").collect()
+    val extra = got.join(ref, cols, "left_anti").collect()
+    assert(missing.isEmpty && extra.isEmpty,
+      s"$label drift: missing=${missing.take(3).mkString("; ")} " +
+        s"extra=${extra.take(3).mkString("; ")}")
+    assert(ref.count() == got.count(), s"$label row count")
   }
 
-  test("simhashHex kernel matches the explode + graft_simhash_sig aggregate") {
-    import graft.functions.SketchAggregates
-    val oldSig = df
-      .select(col("doc_id"), explode(toks).as("t"))
-      .select(col("doc_id"),
-        expr("shiftleft(CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT), 32) " +
-          "| CAST(conv(substring(md5(t), 9, 8), 16, 10) AS BIGINT)").as("v"))
+  test("minhashH48 kernel matches the explode + per-permutation min chain") {
+    // the pre-r22b pipeline as plain expressions: barrier'd tokens →
+    // shingle explode → h48 → per doc, min(pmod(v·aᵢ + bᵢ, p)) for each
+    // permutation. A null-text doc explodes to one NULL-h48 row; the old
+    // aggregate kept it as a NULL-signature row that banding dropped,
+    // minhashSignatures drops the doc itself — so the reference skips
+    // NULL h48 values and the two ROW SETS must be equal
+    val perms = (0 until Dedup.NumPerms).map { i =>
+      min(pmod(col("v") * lit(Dedup.minhashA(i)) + lit(Dedup.minhashB(i)),
+        lit(Dedup.MinhashP)))
+    }
+    val toked = df.select(col("doc_id"), toks.as("tk")).repartition(col("doc_id"))
+    val chainSig = toked
+      .select(col("doc_id"), explode(Dedup.shinglesOf(col("tk"))).as("sh"))
+      .select(col("doc_id"), h48Of(col("sh")).as("v"))
+      .filter(col("v").isNotNull)
       .groupBy("doc_id")
-      .agg(SketchAggregates.simhashSig(col("v")).as("sig"))
-    val newSig = Dedup.simhashHexSignatures(df)
-    val bad = oldSig.withColumnRenamed("sig", "old")
-      .join(newSig.withColumnRenamed("sig", "new"), Seq("doc_id"), "full")
-      .filter(!(col("old") <=> col("new"))).collect()
-    assert(bad.isEmpty, s"simhash kernel drift: ${bad.take(3).mkString("; ")}")
+      .agg(array(perms: _*).as("sig"))
+    val newSig = Dedup.minhashSignatures(df)
+    assertSameRows(chainSig, newSig, "minhash kernel")
+    assert(newSig.count() == texts.count(_ != null))
+  }
+
+  test("simhashHex kernel matches the explode + per-bit sum chain") {
+    // token → 64-bit md5-prefix value → per doc, the sum of each bit
+    // lane; hex digit j (most-significant first) from lanes (16−j)·4+b,
+    // bit b set iff 2·sum > n tokens
+    val v = expr("shiftleft(CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT), 32) " +
+      "| CAST(conv(substring(md5(t), 9, 8), 16, 10) AS BIGINT)")
+    val laneSums = (0 until 64).map(k =>
+      sum(shiftrightunsigned(col("v"), k).bitwiseAND(lit(1L))).as(s"c$k"))
+    val digits = (1 to 16).map { j =>
+      val d = (0 until 4).map(b =>
+        when(lit(2L) * col(s"c${(16 - j) * 4 + b}") > col("n"), lit(1 << b))
+          .otherwise(lit(0))).reduce(_ + _)
+      lower(conv(d.cast("string"), 10, 16))
+    }
+    val chainSig = df
+      .select(col("doc_id"), explode(toks).as("t"))
+      .select(col("doc_id"), v.as("v"))
+      .groupBy("doc_id")
+      .agg(count(col("v")).as("n"), laneSums: _*)
+      .select(col("doc_id"), concat(digits: _*).as("sig"))
+    assertSameRows(chainSig, Dedup.simhashHexSignatures(df), "simhash kernel")
   }
 
   test("sorted-distinct shingle sets + merge ∩-count match array_intersect") {
